@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_engineering_tk_spark.functions.timeutil import epoch_micros, epoch_seconds
+from feature_engineering_tk_spark.operators.window_features import require_future
 
 
 def asof_join(
@@ -149,15 +150,10 @@ def asof_join_directed(
         raise ValueError(
             f"direction must be backward/forward/nearest, got {direction!r}"
         )
-    if not allow_future:
-        from feature_engineering_tk_spark.operators.window_features import (
-            FutureLeakError,
-        )
-
-        raise FutureLeakError(
-            f"asof_join_directed(direction={direction!r}) reads rows after "
-            "the anchor timestamp; pass allow_future=True"
-        )
+    require_future(
+        allow_future,
+        f"asof_join_directed(direction={direction!r}) reads rows after the anchor timestamp",
+    )
     value_cols = value_cols or [
         c for c in right.columns if c not in (entity, right_ts)
     ]

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_engineering_tk_spark.functions.timeutil import epoch_micros
+from feature_engineering_tk_spark.operators.window_features import require_future
 
 _CHAT_ROLES = ("user", "assistant")
 
@@ -655,6 +656,8 @@ def discounted_return(
     g = float(gamma)
     if not (0.0 <= g <= 1.0):
         raise ValueError("gamma must be in [0, 1]")
+    if allow_future:
+        require_future(allow_future, "discounted_return(allow_future=True) reads future turns")
     ev = df.select(
         F.col(conv_id),
         F.struct(

@@ -17,12 +17,16 @@ semantics grafted here:
 
 Leakage contract: every helper here builds frames that END AT THE
 CURRENT ROW (``rowsBetween(lo, 0)`` / ``rangeBetween(lo, 0)``) unless
-explicitly marked future-reading (``with_lead``, ``backward_fill``),
-which callers must opt into with ``allow_future=True`` when assembling
-a leakage-free pipeline (see ``plans.pipeline.LeakageGuard``).
+explicitly marked future-reading (``with_lead``, ``backward_fill``,
+``interpolate_linear``), which callers must opt into with
+``allow_future=True``. Every such opt-in, here and in other operator
+modules, goes through :func:`require_future`, so inside
+``plans.pipeline.strict_no_future()`` it raises even when opted in.
 """
 
 from __future__ import annotations
+
+from contextvars import ContextVar
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -32,6 +36,21 @@ from feature_engineering_tk_spark.functions.timeutil import epoch_micros, epoch_
 
 class FutureLeakError(ValueError):
     """Raised when a future-reading operator is used without opting in."""
+
+
+# set by plans.pipeline.strict_no_future(); a ContextVar, so the guard
+# holds for every caller in the block however it imported the operator
+STRICT_NO_FUTURE: ContextVar[bool] = ContextVar("strict_no_future", default=False)
+
+
+def require_future(allow_future: bool, reason: str) -> None:
+    """Gate of every future-reading operator: raise ``FutureLeakError``
+    unless the caller passed ``allow_future=True`` and no
+    ``strict_no_future()`` block is active."""
+    if not allow_future:
+        raise FutureLeakError(f"{reason}; pass allow_future=True")
+    if STRICT_NO_FUTURE.get():
+        raise FutureLeakError(f"{reason}, refused inside strict_no_future()")
 
 
 def entity_window(entity: str = "conv_id", order: str | list[str] = "turn_idx") -> WindowSpec:
@@ -76,8 +95,7 @@ def with_lead(
     allow_future: bool = False,
 ) -> DataFrame:
     """``F.lead`` — reads FUTURE rows; requires explicit opt-in."""
-    if not allow_future:
-        raise FutureLeakError("with_lead reads future turns; pass allow_future=True")
+    require_future(allow_future, "with_lead reads future turns")
     return df.withColumn(out or f"{col}_lead{k}", F.lead(col, k).over(entity_window(entity, order)))
 
 
@@ -261,8 +279,7 @@ def backward_fill(
 ) -> DataFrame:
     """pandas ``bfill`` parity (``preprocessing.py:198-200``). Reads
     FUTURE turns — requires explicit opt-in."""
-    if not allow_future:
-        raise FutureLeakError("backward_fill reads future turns; pass allow_future=True")
+    require_future(allow_future, "backward_fill reads future turns")
     w = entity_window(entity, order).rowsBetween(0, Window.unboundedFollowing)
     return df.withColumns({c: F.first(c, ignorenulls=True).over(w) for c in cols})
 
@@ -284,8 +301,7 @@ def interpolate_linear(
     ``limit_direction='forward'``). Reads the NEXT non-null ⇒ future-
     reading; interpolation is inherently so (opt-out available).
     """
-    if not allow_future:
-        raise FutureLeakError("interpolate_linear reads future turns for the right bracket")
+    require_future(allow_future, "interpolate_linear reads future turns for the right bracket")
     w = entity_window(entity, order)
     wp = w.rowsBetween(Window.unboundedPreceding, 0)
     wf = w.rowsBetween(0, Window.unboundedFollowing)

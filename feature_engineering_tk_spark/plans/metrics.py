@@ -1,9 +1,9 @@
 """Per-stage metrics: row counts, entity-skew ratio, output bytes.
 
 The north rule requires per-partition lineage and metrics (rows, skew
-ratio, shuffle bytes) persisted per stage. ``stage_snapshot`` /
-``stage_delta`` read TRUE per-Spark-stage shuffle read/write bytes,
-input/output bytes and task counts straight from the JVM
+ratio, shuffle bytes) persisted per stage. ``tagged_exec`` reads the
+shuffle read/write bytes, input/output bytes and task counts of the
+Spark jobs carrying one job tag straight from the JVM
 ``AppStatusStore`` (no UI, REST endpoint, or listener JAR needed —
 identical on ``local[*]`` and a real cluster master); ``entity_skew``
 measures the shuffle-hash distribution a key will see; ``dir_bytes``
@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -90,47 +91,42 @@ def partition_stats(path: str, partition_col: str = "ds") -> list[dict]:
     return out
 
 
-def stage_snapshot(spark) -> dict[int, dict]:
-    """Per-Spark-stage execution metrics (shuffle read/write bytes,
-    input/output bytes, task counts) straight from the JVM
-    ``AppStatusStore`` — no UI or REST endpoint needed, works the same
-    on ``local[*]`` and a real cluster master."""
-    store = spark._jsc.sc().statusStore()
-    gw = spark.sparkContext._gateway
-    stages = store.stageList(
-        gw.jvm.java.util.ArrayList(),
-        False,
-        False,
-        gw.new_array(gw.jvm.double, 0),
-        gw.jvm.java.util.ArrayList(),
-    )
-    out: dict[int, dict] = {}
-    it = stages.iterator()
-    while it.hasNext():
-        st = it.next()
-        out[int(st.stageId())] = {
-            "shuffle_write_bytes": int(st.shuffleWriteBytes()),
-            "shuffle_read_bytes": int(st.shuffleReadBytes()),
-            "input_bytes": int(st.inputBytes()),
-            "output_bytes": int(st.outputBytes()),
-            "tasks": int(st.numCompleteTasks()),
-        }
-    return out
+EXEC_FIELDS = {
+    "shuffle_write_bytes": "shuffleWriteBytes",
+    "shuffle_read_bytes": "shuffleReadBytes",
+    "input_bytes": "inputBytes",
+    "output_bytes": "outputBytes",
+    "tasks": "numCompleteTasks",
+}
 
 
-def stage_delta(before: dict[int, dict], after: dict[int, dict]) -> dict:
-    """Aggregate metrics of the Spark stages that ran between two
-    :func:`stage_snapshot` calls — what one pipeline stage actually
-    shuffled/read, for the lineage journal."""
-    keys = ("shuffle_write_bytes", "shuffle_read_bytes", "input_bytes", "output_bytes", "tasks")
-    agg = dict.fromkeys(keys, 0)
-    n_stages = 0
-    for sid, m in after.items():
-        prev = before.get(sid, dict.fromkeys(keys, 0))
-        diff = {k: m[k] - prev.get(k, 0) for k in keys}
-        if any(diff.values()):
-            n_stages += 1
-            for k in keys:
-                agg[k] += max(diff[k], 0)
-    agg["spark_stages"] = n_stages
+def tagged_exec(spark, tag: str) -> dict:
+    """Shuffle read/write bytes, input/output bytes and completed tasks
+    summed over the Spark stages of the jobs carrying job tag ``tag``
+    (``SparkContext.addJobTag``), plus ``spark_stages``, the number of
+    those stages that ran. Each stage counts once even when several
+    jobs share it; a skipped stage, or one the status store has evicted,
+    counts as zero. The cost follows the tagged jobs, not the age of
+    the application."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    stage_ids: set[int] = set()
+    for jid in sc._jsc.sc().statusTracker().getJobIdsForTag(tag):
+        info = sc.statusTracker().getJobInfo(jid)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    agg = dict.fromkeys(EXEC_FIELDS, 0)
+    agg["spark_stages"] = 0
+    for sid in stage_ids:
+        try:
+            st = store.lastStageAttempt(sid)
+        except Py4JJavaError as exc:
+            if "NoSuchElementException" in str(exc):
+                continue
+            raise
+        m = {k: int(getattr(st, getter)()) for k, getter in EXEC_FIELDS.items()}
+        if any(m.values()):
+            agg["spark_stages"] += 1
+            for k, v in m.items():
+                agg[k] += v
     return agg

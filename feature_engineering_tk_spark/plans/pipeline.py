@@ -4,9 +4,14 @@ The distributed analog of the reference's mutable-DataFrame-plus-
 operation-history model (``preprocessing.py:61-93``): a ``Pipeline``
 accumulates named stages (pure ``DataFrame -> DataFrame`` functions);
 ``run`` executes them lazily, materializing checkpoint stages as
-date-partitioned parquet, and writes a lineage journal with per-stage
-params, wall time, row counts, entity-skew ratio and per-partition
-file stats (the north rule's per-Iceberg-partition lineage+metrics).
+date-partitioned parquet, and appends one record per stage to the
+``lineage.jsonl`` journal: ``event``, ``stage``, ``params``, ``ts``,
+``wall_s`` and ``exec`` (shuffle/input/output bytes, tasks and Spark
+stages of only the jobs under the stage's own job tag: its function's
+and its checkpoint write's); checkpoint stages add ``checkpoint_path``,
+``partitions`` (files and bytes each), ``bytes``, ``skew`` and
+``rows`` (both from one untagged ``entity_skew`` scan; a ``count()``
+without the entity column).
 
 Resume semantics (determinism hard-part #4): a completed checkpoint is
 an artifact — on re-run, completed stages are NOT recomputed; the
@@ -15,8 +20,8 @@ transform state must be persisted by the stage itself (see
 ``transforms.state``) so nothing is ever refit mid-run.
 
 Leakage guard: inside ``strict_no_future()`` every future-reading
-window helper raises even when the caller passes ``allow_future=True``
-— wrap the whole feature job in it for the zero-temporal-leakage
+operator raises even when the caller passes ``allow_future=True`` —
+wrap the whole feature job in it for the zero-temporal-leakage
 contract.
 """
 
@@ -25,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -38,18 +44,13 @@ from feature_engineering_tk_spark.plans import metrics as M
 
 @contextmanager
 def strict_no_future():
-    """While active, with_lead/backward_fill raise FutureLeakError even
-    with allow_future=True (pipeline-level zero-leakage invariant)."""
-    orig_lead, orig_bfill = W.with_lead, W.backward_fill
-
-    def deny(*_a, **_k):
-        raise W.FutureLeakError("future-reading operator inside strict_no_future pipeline")
-
-    W.with_lead, W.backward_fill = deny, deny
+    """While active, every future-reading operator raises FutureLeakError
+    even with allow_future=True (pipeline-level zero-leakage invariant)."""
+    token = W.STRICT_NO_FUTURE.set(True)
     try:
         yield
     finally:
-        W.with_lead, W.backward_fill = orig_lead, orig_bfill
+        W.STRICT_NO_FUTURE.reset(token)
 
 
 @dataclass
@@ -61,17 +62,10 @@ class Stage:
 
 
 class Pipeline:
-    def __init__(
-        self,
-        workdir: str,
-        entity: str = "conv_id",
-        partition_col: str = "ds",
-        collect_metrics: bool = True,
-    ):
+    def __init__(self, workdir: str, entity: str = "conv_id", partition_col: str = "ds"):
         self.workdir = workdir
         self.entity = entity
         self.partition_col = partition_col
-        self.collect_metrics = collect_metrics
         self.stages: list[Stage] = []
         os.makedirs(workdir, exist_ok=True)
 
@@ -118,16 +112,15 @@ class Pipeline:
 
     def _materialize(self, df: DataFrame, stage: Stage) -> DataFrame:
         path = self._stage_dir(stage)
-        out = df
         if self.partition_col in df.columns:
             (
-                out.repartition(self.partition_col)
+                df.repartition(self.partition_col)
                 .write.mode("overwrite")
                 .partitionBy(self.partition_col)
                 .parquet(path)
             )
         else:
-            out.write.mode("overwrite").parquet(path)
+            df.write.mode("overwrite").parquet(path)
         return df.sparkSession.read.parquet(path)
 
     def run(self, spark: SparkSession, df: DataFrame, resume: bool = True) -> DataFrame:
@@ -151,18 +144,24 @@ class Pipeline:
                 }
             )
 
-        for stage in self.stages[start_idx:]:
+        run_id = uuid.uuid4().hex  # a reused tag would also count an earlier run's jobs
+        for i, stage in enumerate(self.stages[start_idx:], start_idx):
             t0 = time.perf_counter()
-            snap0 = M.stage_snapshot(spark) if self.collect_metrics else {}
-            cur = stage.fn(cur)
             record: dict = {
                 "event": "stage",
                 "stage": stage.name,
                 "params": stage.params,
                 "ts": time.time(),
             }
+            tag = f"fe-pipeline-{run_id}-{i}"
+            spark.sparkContext.addJobTag(tag)
+            try:
+                cur = stage.fn(cur)
+                if stage.checkpoint:
+                    cur = self._materialize(cur, stage)
+            finally:
+                spark.sparkContext.removeJobTag(tag)
             if stage.checkpoint:
-                cur = self._materialize(cur, stage)
                 record["checkpoint_path"] = self._stage_dir(stage)
                 record["partitions"] = M.partition_stats(
                     self._stage_dir(stage), self.partition_col
@@ -174,14 +173,13 @@ class Pipeline:
                     "completed_at": time.time(),
                 }
                 self._save_manifest(manifest)
-            if self.collect_metrics:
-                if stage.checkpoint or self.collect_metrics == "eager":
+                if self.entity in cur.columns:
+                    record["skew"] = M.entity_skew(cur, self.entity)
+                    record["rows"] = record["skew"]["rows"]
+                else:
                     record["rows"] = cur.count()
-                    if self.entity in cur.columns:
-                        record["skew"] = M.entity_skew(cur, self.entity)
-                # shuffle bytes actually moved by this stage's Spark jobs
-                # (lazy stages show up in the checkpointing stage's delta)
-                record["exec"] = M.stage_delta(snap0, M.stage_snapshot(spark))
+            # a lazy stage's work shows up in the exec of the checkpoint stage
+            record["exec"] = M.tagged_exec(spark, tag)
             record["wall_s"] = round(time.perf_counter() - t0, 3)
             self._journal(record)
         return cur

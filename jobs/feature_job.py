@@ -29,7 +29,7 @@ the anchor (zero temporal leakage by construction):
 - tokens_roll_mean5 rolling mean over the last 5 turns
 - tokens_cum_sum    expanding sum
 - score_ffill       last-observation-carried-forward score
-- last_tool / last_tool_ts_s  as-of join of the latest prior tool call
+- last_tool         as-of join of the latest prior tool call
 """
 
 from __future__ import annotations

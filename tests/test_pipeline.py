@@ -68,13 +68,31 @@ def test_pipeline_resume_skips_completed(spark, with_ds, tmp_path):
 
 
 def test_strict_no_future_blocks_leaks(transcripts):
+    from feature_engineering_tk_spark.operators.asof import asof_join_directed
+    from feature_engineering_tk_spark.operators.transcripts import discounted_return
+    from feature_engineering_tk_spark.operators.window_features import with_lead
+
+    right = transcripts.select("conv_id", "ts", "tokens")
+    leaks = [
+        lambda: W.with_lead(transcripts, "tokens", 1, allow_future=True),
+        lambda: W.backward_fill(transcripts, ["score"], allow_future=True),
+        lambda: W.interpolate_linear(transcripts, ["score"]),
+        lambda: asof_join_directed(
+            transcripts, right, value_cols=["tokens"], direction="forward", allow_future=True
+        ),
+        lambda: asof_join_directed(
+            transcripts, right, value_cols=["tokens"], direction="nearest", allow_future=True
+        ),
+        lambda: discounted_return(transcripts, reward="tokens", allow_future=True),
+        lambda: with_lead(transcripts, "tokens", 1, allow_future=True),
+    ]
     with strict_no_future():
-        with pytest.raises(W.FutureLeakError):
-            W.with_lead(transcripts, "tokens", 1, allow_future=True)
-        with pytest.raises(W.FutureLeakError):
-            W.backward_fill(transcripts, ["score"], allow_future=True)
+        for leak in leaks:
+            with pytest.raises(W.FutureLeakError, match="strict_no_future"):
+                leak()
     # restored afterwards
-    assert W.with_lead(transcripts, "tokens", 1, allow_future=True) is not None
+    for leak in leaks:
+        assert leak() is not None
 
 
 def test_remaining_partitions_anti_join(spark, with_ds, tmp_path):
@@ -147,3 +165,42 @@ def test_journal_records_shuffle_bytes(spark, transcripts, tmp_path):
     # sessionize shuffles on conv_id; the checkpoint write reads input
     assert stage_rec["exec"]["shuffle_write_bytes"] > 0
     assert stage_rec["exec"]["tasks"] > 0
+
+
+def _one_stage_record(spark, df, tmp_path, fn, checkpoint=False):
+    """Run a one-stage pipeline; return its journal record."""
+    pipe = Pipeline(str(tmp_path / "wd"), entity="conv_id", partition_col="ds")
+    pipe.add("only", fn, checkpoint=checkpoint)
+    pipe.run(spark, df, resume=False)
+    with open(pipe.journal_path) as f:
+        return json.loads(f.readline())
+
+
+def test_checkpoint_exec_excludes_bookkeeping_scans(spark, transcripts, tmp_path):
+    """The rows/skew scans after the checkpoint write are not charged to
+    the stage: a shuffle-free stage written without a partition column
+    moves no shuffle bytes, though the skew scan groups by entity."""
+    rec = _one_stage_record(
+        spark, transcripts, tmp_path, lambda df: df.withColumn("x", F.col("tokens") + 1), checkpoint=True
+    )
+    assert rec["exec"]["shuffle_write_bytes"] == 0
+    assert rec["exec"]["output_bytes"] > 0 and rec["exec"]["tasks"] > 0
+    assert rec["rows"] == rec["skew"]["rows"] == transcripts.count()
+
+
+def test_stage_exec_counts_only_its_own_jobs(spark, transcripts, tmp_path):
+    # rolling_median counts its largest entity when called: one eager job
+    eager = _one_stage_record(spark, transcripts, tmp_path / "eager", lambda df: W.rolling_median(df, "tokens", 3))
+    assert eager["exec"]["tasks"] > 0
+    lazy = _one_stage_record(spark, transcripts, tmp_path / "lazy", lambda df: W.with_lag(df, "tokens", 1))
+    assert lazy["exec"]["tasks"] == 0 and lazy["exec"]["spark_stages"] == 0
+
+
+def test_stage_job_tag_removed_after_failure(spark, transcripts, tmp_path):
+    def boom(df):
+        df.count()
+        raise RuntimeError("stage failed")
+
+    with pytest.raises(RuntimeError, match="stage failed"):
+        _one_stage_record(spark, transcripts, tmp_path, boom)
+    assert not spark.sparkContext.getJobTags()
